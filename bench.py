@@ -259,9 +259,11 @@ def queries_for_line(
 ) -> dict[str, float]:
     """The largest-cost-first per-query subset whose inclusion keeps
     the compact-serialized final line within ``budget`` chars. Greedy
-    by (-seconds, name): the expensive queries are the ones a
-    round-over-round comparator must see; ties and the long tail of
-    sub-second entries fall off deterministically."""
+    by (-seconds, name), stopping at the first entry that does not
+    fit: the expensive queries are the ones a round-over-round
+    comparator must see, and the subset stays a prefix of that order —
+    a cheaper, shorter-named query never takes the place of a dropped
+    costlier one."""
     picked: dict[str, float] = {}
     obj = dict(base_obj)
     for name in sorted(times, key=lambda n: (-times[n], n)):
@@ -269,7 +271,7 @@ def queries_for_line(
         cand[name] = round(times[name], 2)
         obj["queries"] = {k: cand[k] for k in sorted(cand)}
         if len(json.dumps(obj, separators=(",", ":"))) > budget:
-            continue
+            break
         picked = cand
     return {k: picked[k] for k in sorted(picked)}
 

@@ -645,8 +645,8 @@ def logreg_fit(
         # ~(p+1)(p+2)/2 aggregates builds an O(p^3)-node tree per
         # pass), and build the whole pass as SQL STRINGS (r11: each
         # Column node costs a py4j round-trip, so at p=17 plan BUILD
-        # was ~1.0s of the ~1.5s pass — strings take ~0.02s; trajectory
-        # bit-identical, pinned against the Column-API form in
+        # was ~1.0s of the ~1.5s pass — strings take ~0.02s; the IRLS
+        # fits are pinned against independent numpy IRLS references in
         # tests/test_features.py). The eta chain stays LEFT-ASSOC
         # (same fold order as the original Column chain — a balanced
         # chunked fold would change the doubles); fine for the

@@ -1,13 +1,35 @@
 """Similarity search over embedding columns (extension mandate).
 
-Two rungs:
-* brute-force cosine top-k — the exact baseline: broadcast the (small)
-  query set, one linear scan of the corpus, per-query top-k via window.
-  At 100 TB this is still the right shape when the query set is small:
-  no shuffle of the corpus, only of the (n_queries x k) result.
-* LSH-bucketed ANN (random hyperplane signatures) — the scale path when
-  the query set is large or latency matters: candidates share a signature
-  bucket, exact rerank inside buckets only.
+Exact and approximate top-k cosine:
+* brute-force top-k — the exact baseline: broadcast the (small) query
+  set, one linear scan of the corpus, per-query top-k via window. At
+  100 TB this is still the right shape when the query set is small: no
+  shuffle of the corpus, only of the (n_queries x k) result.
+* LSH-bucketed ANN (random hyperplane signatures, multi-probe):
+  candidates share a signature bucket, exact rerank inside buckets.
+* the persisted index family — ONE coarse quantizer plus a per-kind
+  encoder behind shared model I/O. A k-means centroid model assigns
+  every vector to a list (``_coarse_assign``); the kind decides what a
+  list row stores: the quantized vector (IVF), per-row int8 codes
+  (IVF-SQ8), PQ codes of the vector or of its residual from the
+  centroid (IVF-PQ, residual IVF-PQ). Build and append run the same
+  encoder and differ only in write mode and in whether the model is
+  trained or read back; probes read the bounded model once, prune the
+  list_id partitions, score approximately where the kind is
+  compressed, and rerank exactly. The flat SQ8 and PQ indexes are the
+  same encoders without the coarse lists.
+
+On-disk layout of a directory index at ``path`` (this module is the
+only one that reads or writes it):
+* ``{path}/centroids`` — (list_id int, centroid array<double>,
+  quantize int); quantize -1 stands for None.
+* ``{path}/codebooks`` — (subspace int, code int, centroid
+  array<double>), plus a quantize column in the flat PQ index.
+* ``{path}/lists`` (IVF) or ``{path}/codes`` (every other kind) — one
+  row per vector, partitioned by list_id where the kind has lists.
+* ``{path}/meta`` — (kind, quantize, adc_dp), the encode-time identity
+  appends read back; the flat SQ8 index, whose rows live directly at
+  ``path``, keeps it in the sibling ``{path}_meta``.
 
 Vectors are quantized to 3dp doubles before scoring so dot products are
 bit-identical across engines (see registry oracle) — quantization is an
@@ -16,6 +38,8 @@ score raw floats.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,6 +77,28 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _exact_score() -> Column:
+    """The exact rerank score every rung reports: cosine of the staged
+    corpus vector ``cv`` and query vector ``qv``, rounded to 6dp."""
+    return F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
+
+
+def _top_k_per_query(scored: DataFrame, k: int, by: str = "score") -> DataFrame:
+    """Per-query top-k by (``by`` DESC, corpus_id ASC) over a window
+    partitioned by query_id. Ranking the exact ``score`` yields the
+    final (query_id, corpus_id, score, rank) rows; ranking an
+    approximate column yields the (query_id, corpus_id) candidates an
+    exact rerank consumes."""
+    final = by == "score"
+    rank = "rank" if final else "_r"
+    w = W.partitionBy("query_id").orderBy(F.desc(by), F.asc("corpus_id"))
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select("query_id", "corpus_id", *(("score", "rank") if final else ()))
+    )
+
+
 def topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -76,15 +122,8 @@ def topk_cosine(
         F.col(query_id_col).alias("query_id"),
         quantized_vec(vec_col, quantize).alias("qv"),
     )
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
-    )
+    scored = c.crossJoin(F.broadcast(q)).withColumn("score", _exact_score())
+    return _top_k_per_query(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -192,19 +231,12 @@ def topk_cosine_lsh(
         "qv",
         F.col("sig0").bitwiseXOR(F.col("mask")).alias("sig"),
     )
-    scored = c.join(F.broadcast(q), "sig").withColumn(
-        "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-    )
+    scored = c.join(F.broadcast(q), "sig").withColumn("score", _exact_score())
     if n_probes > 1:
         # a candidate can share several probed buckets with the same query;
         # dedup before ranking (identical score rows — any survivor works)
         scored = scored.dropDuplicates(["query_id", "corpus_id"])
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
-    )
+    return _top_k_per_query(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -237,7 +269,7 @@ def embedding_near_dup_pairs(
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — coarse k-means quantizer + probed lists
+# coarse quantizer: sample-trained k-means + nearest-list assignment
 # ---------------------------------------------------------------------------
 
 
@@ -329,6 +361,218 @@ def nearest_lists_expr(
     )
 
 
+# ---------------------------------------------------------------------------
+# persisted-index core: model I/O, coarse assignment, row tables
+# ---------------------------------------------------------------------------
+
+
+def _code(v: int | None) -> int:
+    """Stored form of an optional int setting (quantize, adc_dp)."""
+    return -1 if v is None else int(v)
+
+
+def _decode(c: int) -> int | None:
+    return None if c < 0 else int(c)
+
+
+def _write_centroids(spark, path: str, cents: list, quantize: int | None) -> None:
+    spark.createDataFrame(
+        [(i, [float(v) for v in c], _code(quantize)) for i, c in enumerate(cents)],
+        "list_id int, centroid array<double>, quantize int",
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def _read_centroids(spark, path: str) -> tuple[list, int | None]:
+    """(centroids in list_id order, quantize) of a stored coarse model —
+    one collect of the bounded model table, nothing else."""
+    rows = sorted(
+        spark.read.parquet(f"{path}/centroids").collect(),
+        key=lambda r: r["list_id"],
+    )
+    return [list(r["centroid"]) for r in rows], _decode(rows[0]["quantize"])
+
+
+def _write_codebooks(spark, path: str, books: list, quantize_col=None) -> None:
+    """Long-format PQ codebooks (subspace, code, centroid). The flat PQ
+    index also stores its quantize code per row: pass it as
+    ``quantize_col``."""
+    extra = () if quantize_col is None else (quantize_col,)
+    spark.createDataFrame(
+        [
+            (j, c, [float(v) for v in cent], *extra)
+            for j, book in enumerate(books)
+            for c, cent in enumerate(book)
+        ],
+        "subspace int, code int, centroid array<double>"
+        + ("" if quantize_col is None else ", quantize int"),
+    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+
+
+def _read_codebooks(spark, path: str) -> list[list[list[float]]]:
+    rows = spark.read.parquet(f"{path}/codebooks").collect()
+    books: list[list[list[float]]] = [
+        [] for _ in range(1 + max(r["subspace"] for r in rows))
+    ]
+    for r in sorted(rows, key=lambda r: (r["subspace"], r["code"])):
+        books[r["subspace"]].append(list(r["centroid"]))
+    return books
+
+
+def _rows_path(path: str, kind: str) -> str:
+    """The per-vector table of a directory index: IVF calls it lists,
+    every other kind codes."""
+    return f"{path}/lists" if kind == "ivf" else f"{path}/codes"
+
+
+def _read_index_rows(spark, path: str, kind: str) -> DataFrame:
+    return spark.read.parquet(_rows_path(path, kind))
+
+
+def _write_index_rows(rows: DataFrame, path: str, kind: str, mode: str) -> None:
+    """Build (mode overwrite) and append (mode append) write the same
+    list_id-partitioned table — a probe of p lists scans p partitions."""
+    rows.write.mode(mode).partitionBy("list_id").parquet(_rows_path(path, kind))
+
+
+def _meta_path(path: str, flat: bool = False) -> str:
+    """Sidecar location: {path}/meta for directory-layout indexes;
+    a SIBLING {path}_meta for the flat SQ8 layout, whose data files
+    live directly at ``path`` (a subdirectory there would corrupt the
+    plain parquet read)."""
+    return f"{path.rstrip('/')}_meta" if flat else f"{path}/meta"
+
+
+def write_index_meta(
+    spark,
+    path: str,
+    kind: str,
+    quantize: int | None,
+    adc_dp: int | None = None,
+    flat: bool = False,
+) -> None:
+    """Persist the ENCODE-TIME index identity the table layouts do not
+    record: SQ8's rerank grid ``quantize`` and IVF-PQ's ADC rounding
+    ``adc_dp``. One tiny one-row parquet; append_*_batch reads the
+    identity back from it instead of trusting the caller."""
+    spark.createDataFrame(
+        [(kind, _code(quantize), _code(adc_dp))],
+        "kind string, quantize int, adc_dp int",
+    ).write.mode("overwrite").parquet(_meta_path(path, flat))
+
+
+def read_index_meta(spark, path: str, flat: bool = False) -> dict | None:
+    """The sidecar written by write_index_meta, or None for an index
+    persisted before the sidecar existed (appends refuse such an
+    index: its encode-time identity is unknown)."""
+    import os
+
+    mp = _meta_path(path, flat)
+    local = mp.removeprefix("file:")
+    if "://" not in mp and not os.path.exists(local):
+        return None
+    try:
+        r = spark.read.parquet(mp).first()
+    except Exception as e:
+        # Only a genuinely-missing sidecar means "pre-sidecar index".
+        # A corrupt or partially-written meta must NOT read as missing
+        # (ADVICE r9) — propagate everything except path-not-found.
+        name = type(e).__name__
+        msg = str(e)
+        if "PATH_NOT_FOUND" in msg or (
+            name == "AnalysisException" and "Path does not exist" in msg
+        ):
+            return None
+        raise
+    if r is None:
+        return None
+    return {
+        "kind": r["kind"],
+        "quantize": _decode(r["quantize"]),
+        "adc_dp": _decode(r["adc_dp"]),
+    }
+
+
+def _check_index_kind(meta: dict | None, expected: str, fn: str) -> dict:
+    """The sidecar of the index an append targets, validated: it must
+    exist (it carries the identity the append encodes under) and name
+    the kind the append writes."""
+    if meta is None:
+        raise ValueError(
+            f"{fn}: the index at this path has no meta sidecar, so its "
+            "encode-time identity is unknown — rebuild it with "
+            f"write_{expected}_index before appending"
+        )
+    if meta["kind"] != expected:
+        raise ValueError(
+            f"{fn}: index at this path is kind={meta['kind']!r}, not "
+            f"{expected!r} — appending would mix incompatible layouts"
+        )
+    return meta
+
+
+def read_index_model(spark, path: str, with_books: bool = False):
+    """Read a persisted index's bounded model artifacts back ONCE:
+    (centroids, codebooks_or_None, quantize, meta_or_None). The model
+    is the index's IDENTITY — appended batches must encode under
+    exactly these values or probe scores stop being comparable across
+    batches. A steady-state append loop should call this once and
+    thread the tuple through append_*_batch(model=...) instead of
+    re-collecting the centroids per batch (VERDICT r8 #6)."""
+    cents, quantize = _read_centroids(spark, path)
+    books = _read_codebooks(spark, path) if with_books else None
+    return cents, books, quantize, read_index_meta(spark, path)
+
+
+def _append_model(
+    batch: DataFrame, path: str, kind: str, fn: str, model, with_books=False
+):
+    """The (centroids, codebooks, quantize, meta) an append encodes
+    under: the caller's pre-read ``model`` or one read from the index,
+    with its sidecar validated for ``kind``."""
+    cents, books, quantize, meta = (
+        model
+        if model is not None
+        else read_index_model(batch.sparkSession, path, with_books)
+    )
+    return cents, books, quantize, _check_index_kind(meta, kind, fn)
+
+
+def _coarse_assign(
+    corpus: DataFrame,
+    cents: list,
+    quantize: int | None,
+    id_col: str,
+    vec_col: str,
+    *cols: Column,
+) -> DataFrame:
+    """(corpus_id, list_id, *cols): each vector's nearest centroid, the
+    one coarse-quantizer pass every IVF kind shares. The assignment
+    reads the RAW vector attribute (never a staged cv — extract-only
+    inlining would re-build cv per term, see _dot_const_sql); ``cols``
+    ride the same projection, so they must read raw attributes too."""
+    return ensure_min_partitions(corpus).select(
+        F.col(id_col).alias("corpus_id"),
+        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias("list_id"),
+        *cols,
+    )
+
+
+def _ivf_rows(corpus, cents, quantize, id_col, vec_col) -> DataFrame:
+    """IVF encoder: (corpus_id, cv, list_id) — the list row stores the
+    quantized vector itself. The reordering select (the column order
+    IVF tables have always had) collapses into the assignment
+    projection, so it costs no plan node."""
+    return _coarse_assign(
+        corpus, cents, quantize, id_col, vec_col,
+        quantized_vec(vec_col, quantize).alias("cv"),
+    ).select("corpus_id", "cv", "list_id")
+
+
+# ---------------------------------------------------------------------------
+# IVF (inverted-file) ANN — coarse k-means quantizer + probed lists
+# ---------------------------------------------------------------------------
+
+
 def topk_cosine_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -364,19 +608,7 @@ def topk_cosine_ivf(
             corpus, n_centroids=n_centroids, vec_col=vec_col
         )
     nprobe = min(nprobe, len(centroids))
-    # assignment reads the RAW vector attribute — never the staged cv
-    # (extract-only inlining would re-build cv per term, see
-    # _dot_const_expr); cv is staged separately for the HOF rerank only
-    c = (
-        ensure_min_partitions(corpus)
-        .select(
-            F.col(id_col).alias("corpus_id"),
-            quantized_vec(vec_col, quantize).alias("cv"),
-            nearest_lists_expr(vec_col, centroids, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-        )
-    )
+    c = _ivf_rows(corpus, centroids, quantize, id_col, vec_col)
     # this (list_id, vector) table IS the IVF index: build it once in
     # parallel and stage it to disk — otherwise the probe join's
     # (AQE-coalesced) tasks re-run the centroid assignment serially per
@@ -400,6 +632,28 @@ def topk_cosine_ivf(
     )
 
 
+def _ivf_probes(
+    queries: DataFrame,
+    centroids: list,
+    nprobe: int,
+    query_id_col: str,
+    vec_col: str,
+    quantize: int | None,
+) -> DataFrame:
+    """(query_id, qv, list_id): each query exploded to its nprobe
+    nearest lists — the probe side of the batch and streaming IVF
+    search."""
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        quantized_vec(vec_col, quantize).alias("qv"),
+        F.explode(
+            nearest_lists_expr(
+                vec_col, centroids, min(nprobe, len(centroids)), dp=quantize
+            )
+        ).alias("list_id"),
+    )
+
+
 def _ivf_probe_rerank(
     index: DataFrame,
     queries: DataFrame,
@@ -416,22 +670,11 @@ def _ivf_probe_rerank(
     (broadcast); the equi-join on list_id touches ~nprobe/n_centroids
     of the index (partition-pruned when the index is stored
     partitioned by list_id)."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        quantized_vec(vec_col, quantize).alias("qv"),
-        F.explode(
-            nearest_lists_expr(vec_col, centroids, nprobe, dp=quantize)
-        ).alias("list_id"),
-    )
+    q = _ivf_probes(queries, centroids, nprobe, query_id_col, vec_col, quantize)
     scored = index.join(F.broadcast(q), "list_id").withColumn(
-        "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
+        "score", _exact_score()
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
-    )
+    return _top_k_per_query(scored, k)
 
 
 def write_ivf_index(
@@ -459,22 +702,10 @@ def write_ivf_index(
             corpus, n_centroids=n_centroids, vec_col=vec_col
         )
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(centroids)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    assignments = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("corpus_id"),
-        quantized_vec(vec_col, quantize).alias("cv"),
-        nearest_lists_expr(vec_col, centroids, 1, dp=quantize)[0].alias(
-            "list_id"
-        ),
-    )
-    assignments.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/lists"
+    _write_centroids(spark, path, centroids, quantize)
+    _write_index_rows(
+        _ivf_rows(corpus, centroids, quantize, id_col, vec_col),
+        path, "ivf", "overwrite",
     )
     write_index_meta(spark, path, "ivf", quantize)
     return centroids
@@ -492,18 +723,12 @@ def topk_cosine_ivf_indexed(
     """IVF top-k against a PERSISTED index (write_ivf_index): reads the
     stored centroid model and probes the list_id-partitioned assignment
     table — the corpus embeddings are never rescanned. Same output as
-    topk_cosine_ivf with the same centroids (asserted in tests)."""
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    centroids = [list(r["centroid"]) for r in cent_rows]
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
-    index = spark.read.parquet(f"{path}/lists")
-    nprobe = min(nprobe, len(centroids))
+    topk_cosine_ivf with the same centroids (asserted in tests). The
+    probe reads the centroid table only, never the meta sidecar."""
+    centroids, quantize = _read_centroids(spark, path)
     return _ivf_probe_rerank(
-        index, queries, centroids, k, nprobe, query_id_col, vec_col, quantize
+        _read_index_rows(spark, path, "ivf"),
+        queries, centroids, k, nprobe, query_id_col, vec_col, quantize,
     )
 
 
@@ -831,29 +1056,23 @@ def topk_cosine_pq(
             pq_adc_score_expr("codes", "tabs", m) / F.col("cnorm"), 6
         ),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("corpus_id"))
-    cand = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    # exact rerank: the bounded candidate set (n_queries * k * factor
-    # rows) broadcasts back against the raw vectors — the corpus never
-    # shuffles
+    cand = _top_k_per_query(scored, k * rerank_factor, by="adc")
+    return _pq_rerank(enc, cand, q, k)
+
+
+def _pq_rerank(
+    enc: DataFrame, cand: DataFrame, q: DataFrame, k: int
+) -> DataFrame:
+    """Exact rerank of the PQ kinds: the bounded candidate set
+    (n_queries * k * factor rows) broadcasts back against the stored
+    vectors — the corpus never shuffles."""
     rer = (
         enc.select("corpus_id", "cv")
         .join(F.broadcast(cand), "corpus_id")
         .join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
+        .withColumn("score", _exact_score())
     )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
-    )
+    return _top_k_per_query(rer, k)
 
 
 def write_pq_index(
@@ -875,16 +1094,9 @@ def write_pq_index(
     books = codebooks or train_pq_codebooks(
         corpus, m=m, k_sub=k_sub, vec_col=vec_col
     )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (j, c, [float(v) for v in cent],
-             -1 if quantize is None else quantize)
-            for j, book in enumerate(books)
-            for c, cent in enumerate(book)
-        ],
-        "subspace int, code int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_codebooks(
+        corpus.sparkSession, path, books, quantize_col=_code(quantize)
+    )
     enc = ensure_min_partitions(corpus).select(
         F.col(id_col).alias("corpus_id"),
         pq_codes_expr(vec_col, books, dp=quantize).alias("codes"),
@@ -893,13 +1105,28 @@ def write_pq_index(
         ),
         quantized_vec(vec_col, quantize).alias("cv"),
     )
-    enc.write.mode("overwrite").parquet(f"{path}/codes")
+    enc.write.mode("overwrite").parquet(_rows_path(path, "pq"))
     return books
 
 
 # ---------------------------------------------------------------------------
 # IVF-PQ: coarse partitioning + PQ codes in one persisted index
 # ---------------------------------------------------------------------------
+
+
+def _ivfpq_rows(
+    corpus, cents, books, quantize, adc_dp, id_col, vec_col
+) -> DataFrame:
+    """IVF-PQ encoder: (corpus_id, list_id, codes, cnorm, cv). List
+    assignment and PQ encoding are independent expressions over the RAW
+    vector attribute, so they share one projection without the
+    CollapseProject re-inline trap."""
+    return _coarse_assign(
+        corpus, cents, quantize, id_col, vec_col,
+        pq_codes_expr(vec_col, books, dp=adc_dp).alias("codes"),
+        F.round(norm_expr(quantized_vec(vec_col, quantize)), 9).alias("cnorm"),
+        quantized_vec(vec_col, quantize).alias("cv"),
+    )
 
 
 def write_ivfpq_index(
@@ -918,9 +1145,7 @@ def write_ivfpq_index(
     """Persist the combined ANN index — IVF coarse lists AND PQ codes:
     {path}/centroids (coarse model), {path}/codebooks (PQ model),
     {path}/codes = (corpus_id, codes, cnorm, cv) PARTITIONED BY
-    list_id. ONE corpus pass builds it: list assignment and PQ encoding
-    are independent expressions over the RAW vector attribute, so they
-    share a projection without the CollapseProject re-inline trap.
+    list_id. ONE corpus pass builds it (_ivfpq_rows).
 
     A probe of p lists then scans p/n_centroids of the corpus AND reads
     m-byte codes instead of d-float vectors — the two multiplicative
@@ -941,37 +1166,93 @@ def write_ivfpq_index(
         corpus, m=m, k_sub=k_sub, vec_col=vec_col
     )
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(cents)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (j, c, [float(v) for v in cent])
-            for j, book in enumerate(books)
-            for c, cent in enumerate(book)
-        ],
-        "subspace int, code int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    enc = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("corpus_id"),
-        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-            "list_id"
-        ),
-        pq_codes_expr(vec_col, books, dp=adc_dp).alias("codes"),
-        F.round(norm_expr(quantized_vec(vec_col, quantize)), 9).alias(
-            "cnorm"
-        ),
-        quantized_vec(vec_col, quantize).alias("cv"),
-    )
-    enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
+    _write_centroids(spark, path, cents, quantize)
+    _write_codebooks(spark, path, books)
+    _write_index_rows(
+        _ivfpq_rows(corpus, cents, books, quantize, adc_dp, id_col, vec_col),
+        path, "ivfpq", "overwrite",
     )
     write_index_meta(spark, path, "ivfpq", quantize, adc_dp=adc_dp)
     return cents, books
+
+
+def _ivfpq_search(
+    spark,
+    queries: DataFrame,
+    path: str,
+    kind: str,
+    k: int,
+    nprobe: int,
+    rerank_factor: int,
+    query_id_col: str,
+    vec_col: str,
+    adc_dp: int | None = None,
+) -> DataFrame:
+    """Probe of a persisted IVF-PQ index, plain or residual (``kind``).
+
+    The query-side model application (probe assignment + ADC lookup
+    tables) runs on the DRIVER in numpy: the query set is small by
+    contract, and shipping a few rows of precomputed tables as data
+    beats recompiling thousand-term expressions per call (the codegen
+    cost lives in the index BUILD, paid once). The probed list ids
+    become a STATIC partition filter on the codes scan; the residual
+    kind adds the per-(query, list) coarse dot ``qdotc`` to the ADC sum
+    (its codes encode v - centroid[list])."""
+    import numpy as np
+
+    residual = kind == "ivfpq_residual"
+    cents, quantize = _read_centroids(spark, path)
+    cents = np.asarray(cents)
+    books = _read_codebooks(spark, path)
+    nprobe = min(nprobe, len(cents))
+    q_rows = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        quantized_vec(vec_col, quantize).alias("qv"),
+    ).collect()
+    if not q_rows:
+        raise ValueError("queries is empty")
+    # the driver-rebuilt probe/query frames must carry the CALLER's id
+    # type — the index accepts any id type at build, so hardcoding long
+    # here would reject string or wide ids that built fine (ADVICE r3)
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    sub = len(books[0][0])
+    probe_data, qv_data = [], []
+    for r in q_rows:
+        v = np.asarray(r["qv"], dtype=np.float64)
+        if adc_dp is not None:
+            v = v.round(adc_dp)
+        # nearest lists by |c|^2 - 2 v.c (same ordering as the build)
+        scores = (cents * cents).sum(axis=1) - 2.0 * (cents @ v)
+        lists = [int(i) for i in np.argsort(scores, kind="stable")[:nprobe]]
+        tabs = [
+            [float(np.dot(v[j * sub : (j + 1) * sub], np.asarray(c))) for c in book]
+            for j, book in enumerate(books)
+        ]
+        for li in lists:
+            qdotc = (float(cents[li] @ v),) if residual else ()
+            probe_data.append((r["query_id"], li, tabs, *qdotc))
+        qv_data.append((r["query_id"], [float(x) for x in r["qv"]]))
+    probes = spark.createDataFrame(
+        probe_data,
+        f"query_id {qid_type}, list_id int, tabs array<array<double>>"
+        + (", qdotc double" if residual else ""),
+    )
+    q = spark.createDataFrame(
+        qv_data, f"query_id {qid_type}, qv array<double>"
+    )
+    codes = _read_index_rows(spark, path, kind).filter(
+        F.col("list_id").isin(sorted({p[1] for p in probe_data}))
+    )
+    adc = pq_adc_score_expr("codes", "tabs", len(books))
+    if residual:
+        adc = F.col("qdotc") + adc
+    scored = (
+        codes.drop("cv")
+        .join(F.broadcast(probes), "list_id")
+        .withColumn("adc", F.round(adc / F.col("cnorm"), 6))
+    )
+    cand = _top_k_per_query(scored, k * rerank_factor, by="adc")
+    return _pq_rerank(codes, cand, q, k)
 
 
 def topk_cosine_ivfpq_indexed(
@@ -992,96 +1273,13 @@ def topk_cosine_ivfpq_indexed(
     reliance on runtime DPP); ADC lookup tables ride the broadcast
     query side; the bounded candidate set reranks exactly against cv.
     Full probe + full rerank == brute force exactly (pinned in tests).
-
-    The query-side model application (probe assignment + lookup-table
-    construction) runs on the DRIVER in numpy: the query set is small
-    by contract, and shipping a few rows of precomputed tables as data
-    beats recompiling thousand-term expressions per call (the codegen
-    cost lives in the index BUILD, paid once). A large query batch
-    belongs in topk_cosine_pq, whose expression path is distributed.
+    Query-side model application runs driver-side (_ivfpq_search); a
+    large query batch belongs in topk_cosine_pq, whose expression path
+    is distributed.
     """
-    import numpy as np
-
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    cents = np.asarray([list(r["centroid"]) for r in cent_rows])
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
-    book_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    mm = 1 + max(r["subspace"] for r in book_rows)
-    books: list[list[list[float]]] = [[] for _ in range(mm)]
-    for r in sorted(book_rows, key=lambda r: (r["subspace"], r["code"])):
-        books[r["subspace"]].append(list(r["centroid"]))
-    nprobe = min(nprobe, len(cents))
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        quantized_vec(vec_col, quantize).alias("qv"),
-    ).collect()
-    # the driver-rebuilt probe/query frames must carry the CALLER's id
-    # type — the index accepts any id type at build, so hardcoding long
-    # here would reject string or wide ids that built fine (ADVICE r3)
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    sub = len(books[0][0])
-    probe_data, qv_data = [], []
-    for r in q_rows:
-        v = np.asarray(r["qv"], dtype=np.float64)
-        if adc_dp is not None:
-            v = v.round(adc_dp)
-        # nearest lists by |c|^2 - 2 v.c (same ordering as the build)
-        scores = (cents * cents).sum(axis=1) - 2.0 * (cents @ v)
-        lists = [int(i) for i in np.argsort(scores, kind="stable")[:nprobe]]
-        tabs = [
-            [
-                float(np.dot(v[j * sub : (j + 1) * sub], np.asarray(c)))
-                for c in books[j]
-            ]
-            for j in range(mm)
-        ]
-        for li in lists:
-            probe_data.append((r["query_id"], li, tabs))
-        qv_data.append((r["query_id"], [float(x) for x in r["qv"]]))
-    probes = spark.createDataFrame(
-        probe_data,
-        f"query_id {qid_type}, list_id int, tabs array<array<double>>",
-    )
-    q = spark.createDataFrame(
-        qv_data, f"query_id {qid_type}, qv array<double>"
-    )
-    probed_lists = sorted({p[1] for p in probe_data})
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("list_id").isin(probed_lists)
-    )
-    scored = (
-        codes.drop("cv")
-        .join(F.broadcast(probes), "list_id")
-        .withColumn(
-            "adc",
-            F.round(
-                pq_adc_score_expr("codes", "tabs", mm) / F.col("cnorm"), 6
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("corpus_id"))
-    cand = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    rer = (
-        codes.select("corpus_id", "cv")
-        .join(F.broadcast(cand), "corpus_id")
-        .join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+    return _ivfpq_search(
+        spark, queries, path, "ivfpq", k, nprobe, rerank_factor,
+        query_id_col, vec_col, adc_dp=adc_dp,
     )
 
 
@@ -1415,34 +1613,90 @@ def sq8_encode(
             F.expr("cast(array() as array<int>)").alias("sq_codes"),
             F.lit(0.0).alias("cnorm"),
         ).filter(F.lit(False))
-    dim = int(dim_row["d"])
-    # scale derives from the QUANTIZED cv (the values the codes are
-    # built from) — deriving it from the raw vector lets rounding push
-    # a coordinate above the raw max and a code outside [-127, 127].
-    mx = F.expr(
-        "greatest("
-        + ", ".join(f"abs(cv[{i}])" for i in range(dim))
-        + ")"
-    )
-    scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
     staged = ensure_min_partitions(corpus).select(
         F.col(id_col).alias("corpus_id"),
         quantized_vec(vec_col, quantize).alias("cv"),
-    ).select(
-        "corpus_id",
-        "cv",
-        scale.alias("sq_scale"),
     )
-    enc = staged.select(
-        "corpus_id",
-        "cv",
+    return parquet_checkpoint(
+        _with_sq8_columns(staged, int(dim_row["d"])), "sq8_enc"
+    )
+
+
+def _with_sq8_columns(df: DataFrame, dim: int) -> DataFrame:
+    """``df`` plus the SQ8 columns (sq_scale, sq_codes, cnorm), derived
+    from its ``cv`` column. The scale derives from the QUANTIZED cv
+    (the values the codes are built from) — deriving it from the raw
+    vector lets rounding push a coordinate above the raw max and a code
+    outside [-127, 127]. Callers place their own disk stage boundary:
+    cv must reach the unrolled max as a materialized attribute."""
+    mx = F.expr(
+        "greatest(" + ", ".join(f"abs(cv[{i}])" for i in range(dim)) + ")"
+    )
+    scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
+    cols = df.columns
+    return df.select(*cols, scale.alias("sq_scale")).select(
+        *cols,
         "sq_scale",
         F.expr(
             "transform(cv, x -> cast(round(x / sq_scale) as int))"
         ).alias("sq_codes"),
         F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
     )
-    return parquet_checkpoint(enc, "sq8_enc")
+
+
+def _sq8_score_sql(fn: str, qid, v: list[float], qn: float) -> str:
+    """One query's approximate cosine against SQ8 rows: an UNROLLED
+    integer dot of the raw sq_codes attribute with the query's own
+    int8 code literals (whole-stage-codegen'd flat arithmetic, never an
+    interpreted zip_with; the _dot_const_sql constraints), scaled by
+    both scales and divided by both norms. ``v`` is the vector the
+    query codes derive from, ``qn`` its norm on the rerank grid."""
+    if qn == 0:
+        # mirror the cnorm>0 corpus-side guard: a zero query would
+        # make the score divide by zero (NULL), silently picking
+        # arbitrary candidates — fail loudly instead.
+        raise ValueError(
+            f"{fn}: query {qid!r} has zero norm — cosine similarity is "
+            "undefined for a zero vector"
+        )
+    qmax = max((abs(x) for x in v), default=0.0)
+    qs = qmax / 127.0 if qmax > 0 else 1.0
+    int_dot = " + ".join(
+        f"cast(sq_codes[{i}] as bigint)*{c}L"
+        for i, c in enumerate(int(round(x / qs)) for x in v)
+        if c != 0
+    ) or "0L"
+    return (
+        f"(sq_scale * cast({qs!r} as double) * cast(({int_dot}) as double))"
+        f" / (cnorm * cast({qn!r} as double))"
+    )
+
+
+def _sq8_rerank(
+    per_query: list[DataFrame],
+    vectors: DataFrame,
+    queries: DataFrame,
+    query_id_col: str,
+    vec_col: str,
+    quantize: int | None,
+    k: int,
+    rerank_factor: int,
+) -> DataFrame:
+    """Top k*rerank_factor candidates of the per-query approximate
+    scores, reranked with the EXACT brute-force cosine against their
+    (corpus_id, cv) rows — a column-pruned second read of the codes."""
+    scored = reduce(lambda a, b: a.unionByName(b), per_query)
+    cands = _top_k_per_query(scored, k * rerank_factor, by="_approx")
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        quantized_vec(vec_col, quantize).alias("qv"),
+    )
+    rer = (
+        cands.join(vectors, "corpus_id")
+        .join(F.broadcast(q), "query_id")
+        .withColumn("score", _exact_score())
+    )
+    return _top_k_per_query(rer, k)
 
 
 def topk_cosine_sq8(
@@ -1457,11 +1711,8 @@ def topk_cosine_sq8(
     encoded: DataFrame | None = None,
 ) -> DataFrame:
     """Int8 scalar-quantized ANN top-k with exact rerank. The
-    approximate pass scores every corpus row against each query with an
-    UNROLLED integer dot product over the RAW sq_codes attribute
-    (codes[i] * <query code literal> — whole-stage-codegen'd flat
-    arithmetic, never an interpreted zip_with; the _dot_const_sql
-    constraints), normalized by the stored scales/norms into an
+    approximate pass scores every corpus row against each query with
+    an unrolled integer dot product (_sq8_score_sql) normalized into an
     approximate cosine; the top k*rerank_factor candidates per query
     rerank with the EXACT brute-force cosine expression, so overlap
     with topk_cosine is bit-identical (pinned in tests — rerank over
@@ -1482,30 +1733,11 @@ def topk_cosine_sq8(
     per_query = []
     for r in qrows:
         v = [float(x) for x in r["_v"]]
-        qmax = max((abs(x) for x in v), default=0.0)
-        qs = qmax / 127.0 if qmax > 0 else 1.0
-        qc = [int(round(x / qs)) for x in v]
         qn = sum(
             (round(x, quantize) if quantize is not None else x) ** 2
             for x in v
         ) ** 0.5
-        if qn == 0:
-            # mirror the cnorm>0 corpus-side guard: a zero query would
-            # make _approx divide-by-zero (NULL), silently picking
-            # arbitrary candidates — fail loudly instead.
-            raise ValueError(
-                f"topk_cosine_sq8: query {r['_qid']!r} has zero norm — "
-                "cosine similarity is undefined for a zero vector"
-            )
-        int_dot = " + ".join(
-            f"cast(sq_codes[{i}] as bigint)*{c}L"
-            for i, c in enumerate(qc)
-            if c != 0
-        ) or "0L"
-        approx = (
-            f"(sq_scale * cast({qs!r} as double) * cast(({int_dot}) as double))"
-            f" / (cnorm * cast({qn!r} as double))"
-        )
+        approx = _sq8_score_sql("topk_cosine_sq8", r["_qid"], v, qn)
         per_query.append(
             enc.select(
                 F.lit(r["_qid"]).alias("query_id"),
@@ -1513,37 +1745,9 @@ def topk_cosine_sq8(
                 F.expr(approx).alias("_approx"),
             ).filter(F.col("cnorm") > 0)
         )
-    scored = per_query[0]
-    for p in per_query[1:]:
-        scored = scored.unionByName(p)
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("_approx"), F.asc("corpus_id")
-    )
-    cands = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    # exact rerank: candidates join back their raw (quantized) vectors
-    # — column-pruned second read of the encoded table
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        quantized_vec(vec_col, quantize).alias("qv"),
-    )
-    rer = (
-        cands.join(enc.select("corpus_id", "cv"), "corpus_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("corpus_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+    return _sq8_rerank(
+        per_query, enc.select("corpus_id", "cv"), queries, query_id_col,
+        vec_col, quantize, k, rerank_factor,
     )
 
 
@@ -1561,7 +1765,7 @@ def write_sq8_index(
     part of the index identity: probes must rerank on the same grid,
     so topk_cosine_sq8 over a read-back index must be called with the
     quantize the index was built with — recorded in the sibling
-    {path}_meta sidecar, which append_sq8_batch validates against."""
+    {path}_meta sidecar, which append_sq8_batch encodes under."""
     sq8_encode(
         corpus, id_col=id_col, vec_col=vec_col, quantize=quantize
     ).write.mode("overwrite").parquet(path)
@@ -1575,6 +1779,30 @@ def read_sq8_index(spark, path: str) -> DataFrame:
     every query batch then pays only the column-pruned codes scan,
     never the encode."""
     return spark.read.parquet(path)
+
+
+def _store_ivfsq8(corpus, path, cents, quantize, id_col, vec_col, mode) -> None:
+    """IVF-SQ8 encoder + write, one corpus pass staged in two selects
+    with a disk boundary between them: list assignment reads the RAW
+    vector attribute (the _dot_const_sql CollapseProject constraint),
+    and the scale/codes derive from the MATERIALIZED cv attribute so
+    the quantized vector is never re-inlined per extraction. An empty
+    input writes nothing."""
+    from etl_hero_spark.checkpoint import parquet_checkpoint
+
+    staged = parquet_checkpoint(
+        _coarse_assign(
+            corpus, cents, quantize, id_col, vec_col,
+            quantized_vec(vec_col, quantize).alias("cv"),
+        ),
+        "ivfsq8_staged",
+    )
+    dim_row = staged.select(F.size("cv").alias("d")).first()
+    if dim_row is None:
+        return
+    _write_index_rows(
+        _with_sq8_columns(staged, int(dim_row["d"])), path, "ivfsq8", mode
+    )
 
 
 def write_ivfsq8_index(
@@ -1594,63 +1822,17 @@ def write_ivfsq8_index(
     p/n_centroids of the corpus AND reads 4-byte-int codes instead of
     raw floats — the multiplicative reductions composed, with SQ8's
     cheaper (table-free) scoring where PQ needs per-query ADC tables.
-
-    Build is one corpus pass staged in two selects with a disk
-    boundary between them: list assignment reads the RAW vector
-    attribute (the _dot_const_sql CollapseProject constraint), and the
-    scale/codes derive from the MATERIALIZED cv attribute so the
-    quantized vector is never re-inlined per extraction.
+    Build is one corpus pass (_store_ivfsq8).
 
     Returns the centroid list (also persisted). A pre-trained coarse
     model may be passed via ``centroids`` (the append_*_batch rebuild
     posture)."""
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-    from etl_hero_spark.skew import ensure_min_partitions
-
     cents = centroids if centroids is not None else train_centroids(
         corpus, n_centroids=n_centroids, vec_col=vec_col
     )
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(cents)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    staged = parquet_checkpoint(
-        ensure_min_partitions(corpus).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ),
-        "ivfsq8_staged",
-    )
-    dim = int(staged.select(F.size("cv").alias("d")).first()["d"])
-    mx = F.expr(
-        "greatest(" + ", ".join(f"abs(cv[{i}])" for i in range(dim)) + ")"
-    )
-    scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
-    enc = staged.select(
-        "corpus_id",
-        "list_id",
-        "cv",
-        scale.alias("sq_scale"),
-    ).select(
-        "corpus_id",
-        "list_id",
-        "cv",
-        "sq_scale",
-        F.expr(
-            "transform(cv, x -> cast(round(x / sq_scale) as int))"
-        ).alias("sq_codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
-    )
-    enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    _write_centroids(spark, path, cents, quantize)
+    _store_ivfsq8(corpus, path, cents, quantize, id_col, vec_col, "overwrite")
     write_index_meta(spark, path, "ivfsq8", quantize)
     return cents
 
@@ -1681,13 +1863,8 @@ def topk_cosine_ivfsq8_indexed(
     every unrolled rung here)."""
     import numpy as np
 
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    cents = np.asarray([list(r["centroid"]) for r in cent_rows])
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
+    cents, quantize = _read_centroids(spark, path)
+    cents = np.asarray(cents)
     nprobe = min(nprobe, len(cents))
     qrows = queries.select(
         F.col(query_id_col).alias("_qid"),
@@ -1695,35 +1872,19 @@ def topk_cosine_ivfsq8_indexed(
     ).collect()
     if not qrows:
         raise ValueError("queries is empty")
-    codes_all = spark.read.parquet(f"{path}/codes")
+    codes_all = _read_index_rows(spark, path, "ivfsq8")
     per_query = []
     probed_union: set = set()
     for r in qrows:
-        v = np.asarray([float(x) for x in r["_qv"]], dtype=np.float64)
-        qn = float(np.sqrt((v * v).sum()))
-        if qn == 0:
-            raise ValueError(
-                f"topk_cosine_ivfsq8: query {r['_qid']!r} has zero "
-                "norm — cosine similarity is undefined for a zero "
-                "vector"
-            )
+        qv = [float(x) for x in r["_qv"]]
+        v = np.asarray(qv, dtype=np.float64)
+        approx = _sq8_score_sql(
+            "topk_cosine_ivfsq8", r["_qid"], qv, float(np.sqrt((v * v).sum()))
+        )
         # nearest lists by |c|^2 - 2 v.c (same ordering as the build)
         d2 = (cents * cents).sum(axis=1) - 2.0 * (cents @ v)
         lists = [int(i) for i in np.argsort(d2, kind="stable")[:nprobe]]
         probed_union.update(lists)
-        qmax = float(np.abs(v).max())
-        qs = qmax / 127.0 if qmax > 0 else 1.0
-        qc = [int(round(x / qs)) for x in v]
-        int_dot = " + ".join(
-            f"cast(sq_codes[{i}] as bigint)*{c}L"
-            for i, c in enumerate(qc)
-            if c != 0
-        ) or "0L"
-        approx = (
-            f"(sq_scale * cast({qs!r} as double) * "
-            f"cast(({int_dot}) as double))"
-            f" / (cnorm * cast({qn!r} as double))"
-        )
         per_query.append(
             codes_all.filter(F.col("list_id").isin(lists))
             .filter(F.col("cnorm") > 0)
@@ -1733,40 +1894,58 @@ def topk_cosine_ivfsq8_indexed(
                 F.expr(approx).alias("_approx"),
             )
         )
-    scored = per_query[0]
-    for p in per_query[1:]:
-        scored = scored.unionByName(p)
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("_approx"), F.asc("corpus_id")
+    vectors = codes_all.filter(
+        F.col("list_id").isin(sorted(probed_union))
+    ).select("corpus_id", "cv")
+    return _sq8_rerank(
+        per_query, vectors, queries, query_id_col, vec_col, quantize, k,
+        rerank_factor,
     )
-    cands = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        quantized_vec(vec_col, quantize).alias("qv"),
-    )
-    rer = (
-        cands.join(
-            codes_all.filter(
-                F.col("list_id").isin(sorted(probed_union))
-            ).select("corpus_id", "cv"),
+
+
+def _residual_stage(corpus, cents, quantize, id_col, vec_col) -> DataFrame:
+    """Pass 1 of the residual IVF-PQ encoder: (corpus_id, list_id, cv,
+    rv = cv - centroid[list]) behind a disk boundary, so pass 2's
+    pq_codes_expr extractions read rv as a scan attribute instead of
+    re-inlining a computed array (the _dot_const_sql constraint)."""
+    from etl_hero_spark.checkpoint import parquet_checkpoint
+
+    cents_sql = "array(" + ", ".join(
+        "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in c)
+        + ")"
+        for c in cents
+    ) + ")"
+    return parquet_checkpoint(
+        _coarse_assign(
+            corpus, cents, quantize, id_col, vec_col,
+            quantized_vec(vec_col, quantize).alias("cv"),
+        ).select(
             "corpus_id",
-        )
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
+            "list_id",
+            "cv",
+            # build-once residual: the interpreted per-element lambda is
+            # paid exactly one pass, then rv is a scan attribute
+            F.expr(
+                f"zip_with(cv, element_at({cents_sql}, list_id + 1), "
+                "(a, b) -> a - b)"
+            ).alias("rv"),
+        ),
+        "ivfpq_res_staged",
     )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("corpus_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+
+
+def _store_ivfpq_residual(staged: DataFrame, path, books, mode) -> None:
+    """Pass 2 of the residual IVF-PQ encoder: PQ-encode the staged rv
+    and write (corpus_id, codes, cnorm, cv) partitioned by list_id."""
+    _write_index_rows(
+        staged.select(
+            "corpus_id",
+            "list_id",
+            pq_codes_expr("rv", books, dp=None).alias("codes"),
+            F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
+            "cv",
+        ),
+        path, "ivfpq_residual", mode,
     )
 
 
@@ -1789,51 +1968,20 @@ def write_ivfpq_residual_index(
     rather than re-describing the coarse structure the list id already
     captures — more recall per bit whenever the corpus clusters.
 
-    Build stages the residual column behind a disk boundary (the
-    constraint the plain writer's docstring names): pass 1 assigns
-    lists over the RAW vector attribute and materializes
-    (corpus_id, list_id, cv, rv = cv - centroid[list]); the codebooks
-    train on a bounded rv sample; pass 2 encodes rv — by then a
-    materialized scan attribute, so pq_codes_expr's extractions never
-    re-inline a computed array. Layout matches write_ivfpq_index
-    ({path}/centroids, /codebooks, /codes partitioned by list_id)
-    plus the per-row residual origin is implicit in list_id.
+    Build stages the residual column behind a disk boundary
+    (_residual_stage); the codebooks train on a bounded rv sample; pass
+    2 encodes rv (_store_ivfpq_residual). Layout matches
+    write_ivfpq_index ({path}/centroids, /codebooks, /codes partitioned
+    by list_id) plus the per-row residual origin is implicit in list_id.
 
     Returns (centroids, codebooks)."""
     import numpy as np
-
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-    from etl_hero_spark.skew import ensure_min_partitions
 
     cents = centroids if centroids is not None else train_centroids(
         corpus, n_centroids=n_centroids, vec_col=vec_col
     )
     spark = corpus.sparkSession
-    cents_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in c)
-        + ")"
-        for c in cents
-    ) + ")"
-    staged = parquet_checkpoint(
-        ensure_min_partitions(corpus).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ).select(
-            "corpus_id",
-            "list_id",
-            "cv",
-            # build-once residual: the interpreted per-element lambda is
-            # paid exactly one pass, then rv is a scan attribute
-            F.expr(
-                f"zip_with(cv, element_at({cents_sql}, list_id + 1), "
-                "(a, b) -> a - b)"
-            ).alias("rv"),
-        ),
-        "ivfpq_res_staged",
-    )
+    staged = _residual_stage(corpus, cents, quantize, id_col, vec_col)
     if codebooks is not None:
         books = codebooks
     else:
@@ -1845,32 +1993,9 @@ def write_ivfpq_residual_index(
             iters=10,
             seed=42,
         )
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(cents)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (j, c, [float(v) for v in cent])
-            for j, book in enumerate(books)
-            for c, cent in enumerate(book)
-        ],
-        "subspace int, code int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    enc = staged.select(
-        "corpus_id",
-        "list_id",
-        # rv is a materialized attribute here: no re-inline per extraction
-        pq_codes_expr("rv", books, dp=None).alias("codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
-        "cv",
-    )
-    enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    _write_centroids(spark, path, cents, quantize)
+    _write_codebooks(spark, path, books)
+    _store_ivfpq_residual(staged, path, books, "overwrite")
     write_index_meta(spark, path, "ivfpq_residual", quantize)
     return cents, books
 
@@ -1893,204 +2018,19 @@ def topk_cosine_ivfpq_residual_indexed(
     IVF-PQ. Static partition pruning, exact rerank, and
     full-probe + full-rerank == brute force exactly, same as the plain
     form (pinned in tests/test_simsearch.py)."""
-    import numpy as np
-
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    cents = np.asarray([list(r["centroid"]) for r in cent_rows])
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
-    book_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    mm = 1 + max(r["subspace"] for r in book_rows)
-    books: list[list[list[float]]] = [[] for _ in range(mm)]
-    for r in sorted(book_rows, key=lambda r: (r["subspace"], r["code"])):
-        books[r["subspace"]].append(list(r["centroid"]))
-    nprobe = min(nprobe, len(cents))
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        quantized_vec(vec_col, quantize).alias("qv"),
-    ).collect()
-    if not q_rows:
-        raise ValueError("queries is empty")
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    sub = len(books[0][0])
-    probe_data, qv_data = [], []
-    for r in q_rows:
-        v = np.asarray(r["qv"], dtype=np.float64)
-        scores = (cents * cents).sum(axis=1) - 2.0 * (cents @ v)
-        lists = [int(i) for i in np.argsort(scores, kind="stable")[:nprobe]]
-        tabs = [
-            [
-                float(np.dot(v[j * sub : (j + 1) * sub], np.asarray(c)))
-                for c in books[j]
-            ]
-            for j in range(mm)
-        ]
-        for li in lists:
-            probe_data.append(
-                (r["query_id"], li, tabs, float(cents[li] @ v))
-            )
-        qv_data.append((r["query_id"], [float(x) for x in r["qv"]]))
-    probes = spark.createDataFrame(
-        probe_data,
-        f"query_id {qid_type}, list_id int, tabs array<array<double>>, "
-        "qdotc double",
-    )
-    q = spark.createDataFrame(
-        qv_data, f"query_id {qid_type}, qv array<double>"
-    )
-    probed_lists = sorted({p[1] for p in probe_data})
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("list_id").isin(probed_lists)
-    )
-    scored = (
-        codes.drop("cv")
-        .join(F.broadcast(probes), "list_id")
-        .withColumn(
-            "adc",
-            F.round(
-                (
-                    F.col("qdotc")
-                    + pq_adc_score_expr("codes", "tabs", mm)
-                )
-                / F.col("cnorm"),
-                6,
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("corpus_id"))
-    cand = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    rer = (
-        codes.select("corpus_id", "cv")
-        .join(F.broadcast(cand), "corpus_id")
-        .join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("corpus_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+    return _ivfpq_search(
+        spark, queries, path, "ivfpq_residual", k, nprobe, rerank_factor,
+        query_id_col, vec_col,
     )
 
 
 # ---------------------------------------------------------------------------
 # incremental index maintenance — append a new batch under the FROZEN
 # models (faiss's add-after-train posture; reference: ClaudioCurzi/
-# etl-hero has no index surface — this is engine-side scale machinery)
+# etl-hero has no index surface — this is engine-side scale machinery).
+# Every append reads its identity (model, quantize, adc_dp) back from
+# the index and refuses an index without a meta sidecar.
 # ---------------------------------------------------------------------------
-
-
-def _meta_path(path: str, flat: bool = False) -> str:
-    """Sidecar location: {path}/meta for directory-layout indexes;
-    a SIBLING {path}_meta for the flat SQ8 layout, whose data files
-    live directly at ``path`` (a subdirectory there would corrupt the
-    plain parquet read)."""
-    return f"{path.rstrip('/')}_meta" if flat else f"{path}/meta"
-
-
-def write_index_meta(
-    spark,
-    path: str,
-    kind: str,
-    quantize: int | None,
-    adc_dp: int | None = None,
-    flat: bool = False,
-) -> None:
-    """Persist the ENCODE-TIME index identity the table layouts do not
-    record (ADVICE r8): SQ8's rerank grid ``quantize`` and IVF-PQ's
-    ADC rounding ``adc_dp`` were docstring contracts only — a
-    mismatched append silently mixed incomparably-encoded rows into
-    the index. One tiny one-row parquet; append_*_batch validates
-    against it and fails loudly on mismatch."""
-    spark.createDataFrame(
-        [
-            (
-                kind,
-                -1 if quantize is None else int(quantize),
-                -1 if adc_dp is None else int(adc_dp),
-            )
-        ],
-        "kind string, quantize int, adc_dp int",
-    ).write.mode("overwrite").parquet(_meta_path(path, flat))
-
-
-def read_index_meta(spark, path: str, flat: bool = False) -> dict | None:
-    """The sidecar written by write_index_meta, or None for an index
-    persisted before the sidecar existed (validation then falls back
-    to the original docstring contract)."""
-    import os
-
-    mp = _meta_path(path, flat)
-    local = mp.removeprefix("file:")
-    if "://" not in mp and not os.path.exists(local):
-        return None
-    try:
-        r = spark.read.parquet(mp).first()
-    except Exception as e:
-        # Only a genuinely-missing sidecar means "pre-sidecar index".
-        # A corrupt or partially-written meta must NOT silently
-        # disable the append identity validation it exists to provide
-        # (ADVICE r9) — propagate everything except path-not-found.
-        name = type(e).__name__
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or (
-            name == "AnalysisException" and "Path does not exist" in msg
-        ):
-            return None
-        raise
-    if r is None:
-        return None
-    return {
-        "kind": r["kind"],
-        "quantize": None if r["quantize"] < 0 else int(r["quantize"]),
-        "adc_dp": None if r["adc_dp"] < 0 else int(r["adc_dp"]),
-    }
-
-
-def _check_index_kind(meta: dict | None, expected: str, fn: str) -> None:
-    if meta is not None and meta["kind"] != expected:
-        raise ValueError(
-            f"{fn}: index at this path is kind={meta['kind']!r}, not "
-            f"{expected!r} — appending would mix incompatible layouts"
-        )
-
-
-def read_index_model(spark, path: str, with_books: bool = False):
-    """Read a persisted index's bounded model artifacts back ONCE:
-    (centroids, codebooks_or_None, quantize, meta_or_None). The model
-    is the index's IDENTITY — appended batches must encode under
-    exactly these values or probe scores stop being comparable across
-    batches. A steady-state append loop should call this once and
-    thread the tuple through append_*_batch(model=...) instead of
-    re-collecting the centroids per batch (VERDICT r8 #6)."""
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    cents = [list(r["centroid"]) for r in cent_rows]
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
-    books = None
-    if with_books:
-        book_rows = spark.read.parquet(f"{path}/codebooks").collect()
-        mm = 1 + max(r["subspace"] for r in book_rows)
-        books = [[] for _ in range(mm)]
-        for r in sorted(
-            book_rows, key=lambda r: (r["subspace"], r["code"])
-        ):
-            books[r["subspace"]].append(list(r["centroid"]))
-    return cents, books, quantize, read_index_meta(spark, path)
 
 
 def append_ivf_batch(
@@ -2129,25 +2069,17 @@ def append_ivf_batch(
 
     Probe-equality to an index rebuilt over the union under the same
     frozen model is pinned in tests/test_simsearch.py."""
-    spark = batch.sparkSession
-    cents, _books, quantize, meta = (
-        model if model is not None else read_index_model(spark, path)
+    cents, _books, quantize, _meta = _append_model(
+        batch, path, "ivf", "append_ivf_batch", model
     )
-    _check_index_kind(meta, "ivf", "append_ivf_batch")
     if dedup_ids:
-        existing = spark.read.parquet(f"{path}/lists").select(
+        existing = _read_index_rows(batch.sparkSession, path, "ivf").select(
             F.col("corpus_id").alias(id_col)
         )
         batch = batch.join(existing, id_col, "left_anti")
-    assignments = ensure_min_partitions(batch).select(
-        F.col(id_col).alias("corpus_id"),
-        quantized_vec(vec_col, quantize).alias("cv"),
-        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-            "list_id"
-        ),
-    )
-    assignments.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/lists"
+    _write_index_rows(
+        _ivf_rows(batch, cents, quantize, id_col, vec_col),
+        path, "ivf", "append",
     )
 
 
@@ -2156,32 +2088,20 @@ def append_sq8_batch(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantize: int | None = 3,
     meta: dict | None = None,
 ) -> None:
     """Append a new vector batch to a persisted SQ8 index
     (write_sq8_index). SQ8's scale is PER-ROW, so the encode carries
     no corpus-level model at all — the append is exactly the writer's
-    encode over the batch; ``quantize`` must match the build. The
-    flat layout does not record it, so the writer persists a sibling
-    {path}_meta sidecar and this append VALIDATES against it (ADVICE
-    r8) — a mismatch raises instead of silently mixing rows reranked
-    on a different grid. A pre-sidecar index (no meta) falls back to
-    the docstring contract. ``meta`` takes a pre-read
+    encode over the batch, under the quantize recorded in the index's
+    {path}_meta sidecar. ``meta`` takes a pre-read
     read_index_meta(spark, path, flat=True) dict for steady-state
     append loops."""
     if meta is None:
         meta = read_index_meta(batch.sparkSession, path, flat=True)
     _check_index_kind(meta, "sq8", "append_sq8_batch")
-    if meta is not None and meta["quantize"] != quantize:
-        raise ValueError(
-            "append_sq8_batch: quantize mismatch — index was built "
-            f"with quantize={meta['quantize']!r}, append called with "
-            f"{quantize!r}; appended rows would rerank on a different "
-            "grid than the existing codes"
-        )
     sq8_encode(
-        batch, id_col=id_col, vec_col=vec_col, quantize=quantize
+        batch, id_col=id_col, vec_col=vec_col, quantize=meta["quantize"]
     ).write.mode("append").parquet(path)
 
 
@@ -2193,51 +2113,14 @@ def append_ivfsq8_batch(
     model: tuple | None = None,
 ) -> None:
     """Append a new vector batch to a persisted IVF-SQ8 index
-    (write_ivfsq8_index): coarse-assign against the stored centroids,
-    then derive the per-row scale/int8 codes from the materialized cv
-    exactly as the builder does (same two-select disk boundary), and
-    append into the list_id-partitioned codes table. ``model`` takes
-    a pre-read read_index_model tuple (VERDICT r8 #6)."""
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-
-    spark = batch.sparkSession
-    cents, _books, quantize, meta = (
-        model if model is not None else read_index_model(spark, path)
+    (write_ivfsq8_index): the writer's encoder (_store_ivfsq8) under
+    the stored centroids, appending into the list_id-partitioned codes
+    table. ``model`` takes a pre-read read_index_model tuple (VERDICT
+    r8 #6)."""
+    cents, _books, quantize, _meta = _append_model(
+        batch, path, "ivfsq8", "append_ivfsq8_batch", model
     )
-    _check_index_kind(meta, "ivfsq8", "append_ivfsq8_batch")
-    staged = parquet_checkpoint(
-        ensure_min_partitions(batch).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ),
-        "ivfsq8_append",
-    )
-    dim_row = staged.select(F.size("cv").alias("d")).first()
-    if dim_row is None:
-        return  # empty batch: nothing to append (no-op contract)
-    dim = int(dim_row["d"])
-    mx = F.expr(
-        "greatest(" + ", ".join(f"abs(cv[{i}])" for i in range(dim)) + ")"
-    )
-    scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
-    enc = staged.select(
-        "corpus_id", "list_id", "cv", scale.alias("sq_scale")
-    ).select(
-        "corpus_id",
-        "list_id",
-        "cv",
-        "sq_scale",
-        F.expr(
-            "transform(cv, x -> cast(round(x / sq_scale) as int))"
-        ).alias("sq_codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
-    )
-    enc.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    _store_ivfsq8(batch, path, cents, quantize, id_col, vec_col, "append")
 
 
 def append_ivfpq_batch(
@@ -2245,46 +2128,23 @@ def append_ivfpq_batch(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    adc_dp: int | None = None,
     model: tuple | None = None,
 ) -> None:
     """Append a new vector batch to a persisted IVF-PQ index
     (write_ivfpq_index): encode the batch against the EXISTING stored
-    centroids AND codebooks, append into the partitioned codes table.
-    ``adc_dp`` must match the build (like quantize for SQ8 it is
-    encode-time identity the tables do not record) — the writer now
-    persists it in the {path}/meta sidecar and this append VALIDATES
-    against it (ADVICE r8); a pre-sidecar index falls back to the
-    docstring contract. ``model`` takes a pre-read
+    centroids AND codebooks, with the ADC rounding ``adc_dp`` recorded
+    in the index's meta sidecar, and append into the partitioned codes
+    table. ``model`` takes a pre-read
     read_index_model(spark, path, with_books=True) tuple (VERDICT
     r8 #6)."""
-    spark = batch.sparkSession
-    cents, books, quantize, meta = (
-        model
-        if model is not None
-        else read_index_model(spark, path, with_books=True)
+    cents, books, quantize, meta = _append_model(
+        batch, path, "ivfpq", "append_ivfpq_batch", model, with_books=True
     )
-    _check_index_kind(meta, "ivfpq", "append_ivfpq_batch")
-    if meta is not None and meta["adc_dp"] != adc_dp:
-        raise ValueError(
-            "append_ivfpq_batch: adc_dp mismatch — index was encoded "
-            f"with adc_dp={meta['adc_dp']!r}, append called with "
-            f"{adc_dp!r}; appended codes would be incomparable with "
-            "the existing ADC tables"
-        )
-    enc = ensure_min_partitions(batch).select(
-        F.col(id_col).alias("corpus_id"),
-        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-            "list_id"
+    _write_index_rows(
+        _ivfpq_rows(
+            batch, cents, books, quantize, meta["adc_dp"], id_col, vec_col
         ),
-        pq_codes_expr(vec_col, books, dp=adc_dp).alias("codes"),
-        F.round(norm_expr(quantized_vec(vec_col, quantize)), 9).alias(
-            "cnorm"
-        ),
-        quantized_vec(vec_col, quantize).alias("cv"),
-    )
-    enc.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/codes"
+        path, "ivfpq", "append",
     )
 
 
@@ -2296,51 +2156,15 @@ def append_ivfpq_residual_batch(
     model: tuple | None = None,
 ) -> None:
     """Append a new vector batch to a persisted RESIDUAL IVF-PQ index
-    (write_ivfpq_residual_index): coarse-assign against the stored
-    centroids, stage the residual v - centroid[list] behind a disk
-    boundary (the builder's CollapseProject constraint applies to the
-    batch too), PQ-encode the residual with the stored codebooks,
-    append. ``model`` takes a pre-read read_index_model tuple
-    (VERDICT r8 #6)."""
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-
-    spark = batch.sparkSession
-    cents, books, quantize, meta = (
-        model
-        if model is not None
-        else read_index_model(spark, path, with_books=True)
+    (write_ivfpq_residual_index): the writer's two-pass encoder
+    (_residual_stage, then _store_ivfpq_residual) under the stored
+    centroids and codebooks. ``model`` takes a pre-read
+    read_index_model tuple (VERDICT r8 #6)."""
+    cents, books, quantize, _meta = _append_model(
+        batch, path, "ivfpq_residual", "append_ivfpq_residual_batch", model,
+        with_books=True,
     )
-    _check_index_kind(meta, "ivfpq_residual", "append_ivfpq_residual_batch")
-    cents_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in c)
-        + ")"
-        for c in cents
-    ) + ")"
-    staged = parquet_checkpoint(
-        ensure_min_partitions(batch).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ).select(
-            "corpus_id",
-            "list_id",
-            "cv",
-            F.expr(
-                f"zip_with(cv, element_at({cents_sql}, list_id + 1), "
-                "(a, b) -> a - b)"
-            ).alias("rv"),
-        ),
-        "ivfpq_res_append",
-    )
-    enc = staged.select(
-        "corpus_id",
-        "list_id",
-        pq_codes_expr("rv", books, dp=None).alias("codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
-        "cv",
-    )
-    enc.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/codes"
+    _store_ivfpq_residual(
+        _residual_stage(batch, cents, quantize, id_col, vec_col),
+        path, books, "append",
     )

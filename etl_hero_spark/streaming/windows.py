@@ -1084,8 +1084,13 @@ def stream_attribution_join(
     join state store (4 per shuffle partition; measured ~4 s of the
     ~10 s drain at sf0.1 processing ZERO rows). Window aggregations
     under append mode DO need their no-data batch (final windows emit
-    when the watermark passes), which is why this is scoped here and
-    not set session-wide.
+    when the watermark passes), which is why it is flipped only for
+    the length of this drain and not left set as a session default.
+
+    Not re-entrant: the flip is SESSION state while the drain runs, so
+    another query started on the same session meanwhile (another
+    thread, or a second attribution drain) runs without its no-data
+    batches, and overlapping drains can restore the conf out of order.
     """
     src = _events_stream_source(spark, events_path, "etl_hero_stream_attr_")
     v = (
@@ -1764,34 +1769,23 @@ def stream_ann_probe(
     per-query candidate cap is the probed-lists size, resolved at the
     drain like stream_psi_monitor's bounded finalize)."""
     from etl_hero_spark.simsearch import (
-        cosine_expr,
-        nearest_lists_expr,
-        quantized_vec,
+        _exact_score,
+        _ivf_probes,
+        _read_centroids,
+        _read_index_rows,
+        _top_k_per_query,
     )
 
-    cent_rows = sorted(
-        spark.read.parquet(f"{index_path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    centroids = [list(r["centroid"]) for r in cent_rows]
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
-    nprobe = min(nprobe, len(centroids))
+    centroids, quantize = _read_centroids(spark, index_path)
     src = _emb_stream_source(spark, emb_path)
     if query_pred is not None:
         src = src.filter(query_pred)
-    probes = src.select(
-        F.col("vec_id").alias("query_id"),
-        quantized_vec("embedding", quantize).alias("qv"),
-        F.explode(
-            nearest_lists_expr("embedding", centroids, nprobe, dp=quantize)
-        ).alias("list_id"),
+    probes = _ivf_probes(
+        src, centroids, nprobe, "vec_id", "embedding", quantize
     )
-    index = spark.read.parquet(f"{index_path}/lists")
+    index = _read_index_rows(spark, index_path, "ivf")
     scored = probes.join(index, "list_id").select(
-        "query_id",
-        "corpus_id",
-        F.round(cosine_expr(F.col("cv"), F.col("qv")), 6).alias("score"),
+        "query_id", "corpus_id", _exact_score().alias("score")
     )
     q = (
         scored.writeStream.outputMode("append")
@@ -1803,15 +1797,7 @@ def stream_ann_probe(
         q.processAllAvailable()
     finally:
         q.stop()
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("corpus_id")
-    )
-    return (
-        spark.table(query_name)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
-    )
+    return _top_k_per_query(spark.table(query_name), k)
 
 
 def stream_ann_maintain(
@@ -1850,7 +1836,11 @@ def stream_ann_maintain(
     (bit-for-bit, including the per-list counts) is pinned in
     tests/test_streaming.py. ``query_name`` keys the stream run.
     """
-    from etl_hero_spark.simsearch import append_ivf_batch, read_index_model
+    from etl_hero_spark.simsearch import (
+        _read_index_rows,
+        append_ivf_batch,
+        read_index_model,
+    )
 
     model = read_index_model(spark, index_path)
     src = _emb_stream_source(
@@ -1877,7 +1867,7 @@ def stream_ann_maintain(
     finally:
         q.stop()
     return (
-        spark.read.parquet(f"{index_path}/lists")
+        _read_index_rows(spark, index_path, "ivf")
         .groupBy("list_id")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
         .orderBy("list_id")

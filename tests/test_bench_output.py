@@ -305,6 +305,19 @@ def test_final_line_with_queries_fits_tail_window():
     if len(q) < len(times):
         omitted_max = max(t for n, t in times.items() if n not in q)
         assert all(times[n] >= omitted_max - 1e-9 for n in q)
+    # non-uniform costs and names: an expensive long-named query that
+    # overflows the line ends the subset — the cheap short names after
+    # it must not slip in, or the subset stops being the
+    # largest-cost-first prefix
+    mixed = {
+        "big": 50.0,
+        "expensive_" + "x" * DRIVER_TAIL_CHARS: 40.0,
+        **{f"q{i}": 1.0 for i in range(5)},
+    }
+    got = bench.queries_for_line(mixed, dict(base, n_queries=len(mixed)))
+    order = sorted(mixed, key=lambda n: (-mixed[n], n))
+    assert got == {"big": 50.0}
+    assert sorted(got) == sorted(order[: len(got)])
 
 
 def test_queries_for_line_real_snapshot_coverage():

@@ -50,3 +50,30 @@ def test_no_shadowed_top_level_definitions(path):
         "top level — the later definition silently shadows the earlier one "
         "(F811). Delete one."
     )
+
+
+# The persisted ANN indexes' on-disk layout (see the simsearch module
+# docstring). Only simsearch.py may spell these paths; every other module
+# reads and writes an index through simsearch's functions, so the format
+# can change in one place. "_meta" is deliberately not a fragment: other
+# modules use it in unrelated names.
+INDEX_LAYOUT_FRAGMENTS = ("/centroids", "/codebooks", "/lists", "/codes", "/meta")
+
+
+def test_index_layout_paths_only_in_simsearch():
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == PACKAGE / "simsearch.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                hits += [
+                    f"{path.relative_to(REPO)}:{node.lineno} {frag!r}"
+                    for frag in INDEX_LAYOUT_FRAGMENTS
+                    if frag in node.value
+                ]
+    assert not hits, (
+        "index layout paths outside etl_hero_spark/simsearch.py — read "
+        "and write indexes through simsearch instead:\n" + "\n".join(hits)
+    )

@@ -1278,52 +1278,100 @@ def test_index_meta_sidecar_written_and_read(spark, emb, tmp_path):
     assert read_index_meta(spark, str(tmp_path / "nothing")) is None
 
 
-def test_append_sq8_quantize_mismatch_raises(spark, emb, tmp_path):
-    """ADVICE r8: appending with a different quantize than the build
-    must fail LOUDLY instead of silently mixing rows reranked on a
-    different grid."""
-    import pytest
-
-    from etl_hero_spark.simsearch import append_sq8_batch, write_sq8_index
-
-    a, b = _split_corpus(emb)
-    path = str(tmp_path / "sq8_mismatch")
-    write_sq8_index(a, path, quantize=3)
-    with pytest.raises(ValueError, match="quantize mismatch"):
-        append_sq8_batch(b, path, quantize=2)
-    with pytest.raises(ValueError, match="quantize mismatch"):
-        append_sq8_batch(b, path, quantize=None)
-    # matching quantize still appends
-    append_sq8_batch(b, path, quantize=3)
-    assert spark.read.parquet(path).count() == emb.count()
-
-
-def test_append_ivfpq_adc_dp_mismatch_raises(spark, emb, tmp_path):
-    """ADVICE r8: adc_dp is encode-time identity — a mismatched append
-    raises; appending to an index of a DIFFERENT KIND raises too."""
+def test_append_encodes_under_the_stored_identity(
+    spark, emb, queries, tmp_path
+):
+    """The append identity comes from the index, not from the caller:
+    an SQ8 index built with a non-default quantize=2 and an IVF-PQ
+    index built with adc_dp=4 take an append that probes equal to a
+    rebuild over the union with the same settings. Appending to an
+    index of a DIFFERENT KIND raises."""
     import pytest
 
     from etl_hero_spark.simsearch import (
         append_ivf_batch,
         append_ivfpq_batch,
+        append_sq8_batch,
+        read_sq8_index,
+        topk_cosine_ivfpq_indexed,
+        topk_cosine_sq8,
         write_ivfpq_index,
+        write_sq8_index,
     )
 
     a, b = _split_corpus(emb)
-    path = str(tmp_path / "ivfpq_mismatch")
-    write_ivfpq_index(a, path, n_centroids=4, m=4, k_sub=8, adc_dp=4)
-    with pytest.raises(ValueError, match="adc_dp mismatch"):
-        append_ivfpq_batch(b, path, adc_dp=None)
-    with pytest.raises(ValueError, match="adc_dp mismatch"):
-        append_ivfpq_batch(b, path, adc_dp=6)
-    # wrong-kind append against the same path is equally loud
-    with pytest.raises(ValueError, match="kind"):
-        append_ivf_batch(b, path)
-    # the matching append works
-    append_ivfpq_batch(b, path, adc_dp=4)
-    assert (
-        spark.read.parquet(f"{path}/codes").count() == emb.count()
+    sq8_inc, sq8_full = str(tmp_path / "sq8_q2_inc"), str(tmp_path / "sq8_q2")
+    write_sq8_index(a, sq8_inc, quantize=2)
+    append_sq8_batch(b, sq8_inc)
+    write_sq8_index(emb, sq8_full, quantize=2)
+
+    def sq8_probe(path):
+        return {
+            tuple(r)
+            for r in topk_cosine_sq8(
+                emb, queries, k=5, quantize=2,
+                encoded=read_sq8_index(spark, path),
+            ).collect()
+        }
+
+    got = sq8_probe(sq8_inc)
+    assert got == sq8_probe(sq8_full) and got
+
+    pq_inc, pq_full = str(tmp_path / "ivfpq_a4_inc"), str(tmp_path / "ivfpq_a4")
+    cents, books = write_ivfpq_index(
+        a, pq_inc, n_centroids=4, m=4, k_sub=8, adc_dp=4
     )
+    append_ivfpq_batch(b, pq_inc)
+    write_ivfpq_index(
+        emb, pq_full, n_centroids=4, m=4, k_sub=8, adc_dp=4,
+        centroids=cents, codebooks=books,
+    )
+
+    def pq_probe(path):
+        return {
+            tuple(r)
+            for r in topk_cosine_ivfpq_indexed(
+                spark, queries, path, k=5, nprobe=2, adc_dp=4
+            ).collect()
+        }
+
+    got = pq_probe(pq_inc)
+    assert got == pq_probe(pq_full) and got
+    # wrong-kind append against the same path is loud
+    with pytest.raises(ValueError, match="kind"):
+        append_ivf_batch(b, pq_inc)
+
+
+def test_append_without_meta_sidecar_raises(spark, emb, tmp_path):
+    """An index whose meta sidecar is missing has no recorded
+    encode-time identity, so appends refuse it instead of trusting
+    defaults — flat SQ8 (sibling sidecar) and IVF-PQ (in-directory
+    sidecar) alike."""
+    import shutil
+
+    import pytest
+
+    from etl_hero_spark.simsearch import (
+        append_ivfpq_batch,
+        append_sq8_batch,
+        write_ivfpq_index,
+        write_sq8_index,
+    )
+
+    a, b = _split_corpus(emb)
+    sq8 = str(tmp_path / "sq8_nometa")
+    write_sq8_index(a, sq8)
+    shutil.rmtree(f"{sq8}_meta")
+    with pytest.raises(ValueError, match="no meta sidecar"):
+        append_sq8_batch(b, sq8)
+    pq = str(tmp_path / "ivfpq_nometa")
+    write_ivfpq_index(a, pq, n_centroids=4, m=4, k_sub=8)
+    shutil.rmtree(f"{pq}/meta")
+    with pytest.raises(ValueError, match="no meta sidecar"):
+        append_ivfpq_batch(b, pq)
+    # nothing was appended
+    assert spark.read.parquet(sq8).count() == a.count()
+    assert spark.read.parquet(f"{pq}/codes").count() == a.count()
 
 
 def test_append_with_preread_model_equals_per_call_read(
@@ -1437,3 +1485,141 @@ def test_read_index_meta_corrupt_sidecar_raises(spark, emb, tmp_path):
         read_index_meta(spark, path)
     # missing path still reads as None (back-compat contract intact)
     assert read_index_meta(spark, str(tmp_path / "absent")) is None
+
+
+# ---------------------------------------------------------------------------
+# serving-path pin: the four calls the benchmark measures keep their Spark
+# job counts and physical plans
+# ---------------------------------------------------------------------------
+
+# measured on the index code before the shared-helper refactor; a change
+# here means a request pays a different number of jobs or runs a
+# different plan
+SERVING_JOBS = {
+    "write_ivf_index": 5,
+    "read_index_model": 4,
+    "append_ivf_batch": 2,
+    "topk_cosine_ivf_indexed": 6,
+}
+# sha256 prefixes of the normalised plans each call writes or collects
+SERVING_PLANS = {
+    "write_ivf_index": "9e4aff621f9ce13a",
+    "read_index_model": "a8c8766f758ea81b",
+    "append_ivf_batch": "b8e85329b3b120f1",
+    "topk_cosine_ivf_indexed": "e25dd622b013f571",
+}
+
+
+def _normalized_plan(df, replace: dict) -> str:
+    import contextlib
+    import io
+    import re
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    s = buf.getvalue()
+    for old, new in replace.items():
+        s = s.replace(old, new)
+    s = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1", s)
+    s = re.sub(r"#\d+L?", "#", s)
+    return re.sub(r"plan_id=\d+", "plan_id=", s)
+
+
+def _plan_digest(plans: list[str]) -> str:
+    import hashlib
+
+    return hashlib.sha256("\n====\n".join(plans).encode()).hexdigest()[:16]
+
+
+def test_ivf_serving_path_jobs_and_plans_pinned(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """write_ivf_index, read_index_model, append_ivf_batch(model=...) and
+    a collected topk_cosine_ivf_indexed probe — the benchmark's serving
+    loop — each run a pinned number of Spark jobs (counted per job group
+    through the status tracker), and every DataFrame they write or
+    collect keeps its physical plan (explain() with expression ids,
+    plan ids and paths normalised). A probe that started reading the
+    meta sidecar, or a build that re-planned its assignment, fails
+    here."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from etl_hero_spark.simsearch import (
+        append_ivf_batch,
+        read_index_model,
+        topk_cosine_ivf_indexed,
+        write_ivf_index,
+    )
+
+    sc = spark.sparkContext
+    # a private copy of the vectors: a frame another test cached over
+    # the shared fixture file would swap its scan for an in-memory one
+    src = str(tmp_path / "emb")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").write.parquet(src)
+    emb = spark.read.parquet(src)
+    base = emb.filter(F.col("vec_id") % 4 != 0)
+    batch = emb.filter(F.col("vec_id") % 4 == 0)
+    qs = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    replace = {str(tmp_path): "<tmp>"}
+
+    def run(name, fn, path):
+        plans: list[str] = []
+        write_parquet = DataFrameWriter.parquet
+        collect = DataFrame.collect
+
+        def spy_write(self, p, *a, **kw):
+            plans.append(_normalized_plan(self._df, replace))
+            return write_parquet(self, p, *a, **kw)
+
+        def spy_collect(self):
+            plans.append(_normalized_plan(self, replace))
+            return collect(self)
+
+        # plans come from a twin call on its own path, so explain()
+        # never runs inside the counted job group
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", spy_write)
+            m.setattr(DataFrame, "collect", spy_collect)
+            fn(f"{path}_plan")
+        group = f"serving-pin-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn(path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), plans, out
+
+    idx = str(tmp_path / "ivf")
+    jobs, plans = {}, {}
+    jobs["write_ivf_index"], plans["write_ivf_index"], _ = run(
+        "write_ivf_index",
+        lambda p: write_ivf_index(base, p, n_centroids=8),
+        idx,
+    )
+    jobs["read_index_model"], plans["read_index_model"], model = run(
+        "read_index_model", lambda p: read_index_model(spark, idx), idx
+    )
+    jobs["append_ivf_batch"], plans["append_ivf_batch"], _ = run(
+        "append_ivf_batch",
+        lambda p: append_ivf_batch(batch, p, model=model),
+        idx,
+    )
+    jobs["topk_cosine_ivf_indexed"], plans["topk_cosine_ivf_indexed"], rows = run(
+        "topk_cosine_ivf_indexed",
+        lambda p: topk_cosine_ivf_indexed(spark, qs, idx, k=5, nprobe=3).collect(),
+        idx,
+    )
+    assert len(rows) == 15
+    digests = {n: _plan_digest(p) for n, p in plans.items()}
+    assert jobs == SERVING_JOBS
+    assert digests == SERVING_PLANS, "\n\n".join(
+        f"{n}:\n" + "\n----\n".join(plans[n])[:4000]
+        for n in plans
+        if digests[n] != SERVING_PLANS.get(n)
+    )
